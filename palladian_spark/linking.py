@@ -65,20 +65,25 @@ def make_surface_linker(norm_map, entries, metric: str, threshold: float,
     bar.  ``norm_map`` is {normalized key: min(surface)} and must be
     computed by the SAME normalization as the staged path (the callers
     build it with the Spark normalize_surface column so dictionary-side
-    normalization is literally shared)."""
+    normalization is literally shared).
+
+    The blocked fuzzy index is built on the first exact miss, so a linker
+    that only ever sees dictionary surfaces never pays for it."""
     sim_fn = METRICS[metric] if entries else None
     frac = _bound_frac(metric, threshold) if entries else None
-    index = _BlockedDict(entries, metric) if (entries and frac is not None) \
-        else None
+    index = None
     memo: dict = {}
 
     def link(value: str):
+        nonlocal index
         hit = memo.get(value, _LINK_MISS)
         if hit is not _LINK_MISS:
             return hit
         canon, sim = norm_map.get(normalize_surface_py(value)), 1.0
         if canon is None and entries:
             best, best_sim = None, threshold
+            if frac is not None and index is None:
+                index = _BlockedDict(entries, metric)
             cand = ((entries[i] for i in index.candidates(value, frac))
                     if index is not None else iter(entries))
             for _eid, surface, _concept in cand:
@@ -186,7 +191,25 @@ class _BlockedDict:
         return np.sort(self.order[lo:hi][keep])
 
 
-_INDEX_CACHE: dict = {}  # (plan_uuid) -> _BlockedDict, per Python worker
+def worker_resident(cache: dict, key, build, limit: int):
+    """Get-or-build for state that lives as long as a Python worker
+    process: ``cache[key]``, calling ``build()`` on a miss and evicting the
+    oldest entries so at most ``limit`` stay resident.
+
+    ``cache`` must be a module-level dict that the task closure fetches
+    through an import (``from palladian_spark import linking`` then
+    ``linking._INDEX_CACHE``): cloudpickle ships a nested function's
+    globals BY VALUE, so a closure naming the dict directly gets an empty
+    copy in every task and rebuilds per task."""
+    hit = cache.get(key)
+    if hit is None:
+        while len(cache) >= limit:
+            cache.pop(next(iter(cache)))
+        hit = cache[key] = build()
+    return hit
+
+
+_INDEX_CACHE: dict = {}  # plan id -> _BlockedDict, per Python worker
 
 
 _FUZZY_SCHEMA = StructType([
@@ -219,17 +242,12 @@ def fuzzy_link_df(values: DataFrame, entity_dict: DataFrame,
     plan_id = uuid.uuid4().hex  # per-worker index cache key for THIS plan
 
     def fuzzy_match(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from palladian_spark import linking
         entries = dict_bc.value
         index = None
         if frac is not None:
-            index = _INDEX_CACHE.get(plan_id)
-            if index is None:
-                index = _BlockedDict(entries, metric)
-                if len(_INDEX_CACHE) > 8:
-                    # evict ONE oldest entry — clearing everything would
-                    # force still-running plans to rebuild per task
-                    _INDEX_CACHE.pop(next(iter(_INDEX_CACHE)))
-                _INDEX_CACHE[plan_id] = index
+            index = worker_resident(linking._INDEX_CACHE, plan_id,
+                                    lambda: _BlockedDict(entries, metric), 8)
         for pdf in iterator:
             out = {k: [] for k in
                    ("value", "entity_id", "canonical", "concept", "link_sim")}

@@ -11,6 +11,20 @@ triples AND a lineage row (bucket, stage, row_count, checksum).  Resume =
 anti-join the bucket list against completed lineage rows — only missing
 buckets are recomputed.  At cluster scale buckets map 1:1 onto Iceberg
 partitions; parquet subdirectories model that here.
+
+Fixed costs are paid once per ``run_pipeline`` call, not per bucket:
+
+  * the extraction plan (relations.canonical_triples_extractor) is built
+    once before the bucket loop — the dictionary collects, the model and
+    dictionary broadcasts and the plan id;
+  * on the workers each Python process keeps one extraction context per
+    plan (model, linker memo, classify/window caches, compiled patterns;
+    at most two plans resident, oldest evicted), so a bucket's tasks
+    start warm;
+  * each bucket is ONE write action over the observed result: the
+    lineage ``row_count`` and ``checksum`` come from an ``Observation``
+    on that write, not from a cache plus separate count and checksum
+    jobs.  The lineage row is a second, one-row write.
 """
 
 from __future__ import annotations
@@ -20,14 +34,14 @@ import time
 from dataclasses import dataclass
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from palladian_spark.data.transcripts import entity_dictionary_pdf
 from palladian_spark.ner.model import NerModel
 from palladian_spark.ner.train import build_annotation_dictionary, build_entity_dictionary
 from palladian_spark.operators.mentions import repartition_salted
 from palladian_spark.relations import (
-    DEFAULT_PATTERNS, extract_canonical_triples,
+    DEFAULT_PATTERNS, canonical_triples_extractor,
 )
 from palladian_spark.textproc.taggers import Annotation
 
@@ -79,20 +93,23 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame,
             entity_dictionary_pdf().assign(
                 entity_id=lambda d: d["concept"].str.lower() + ":" + d["surface"]))
 
-    def compute(df: DataFrame,
-                cache_handles: Optional[list] = None) -> DataFrame:
+    def plan():
         # fused single-pass extraction+linking (the broadcastable-dict
         # default; extract_canonical_triples docstring has the trade-off
         # vs the staged mapping-first shape, which canonicalize_triples
-        # keeps for huge alias dictionaries)
-        staged = repartition_salted(df, partitions) if partitions else df
-        return extract_canonical_triples(staged, model, entity_dict,
-                                         patterns=patterns,
-                                         min_link_sim=min_link_sim,
-                                         drop_unlinked=drop_unlinked)
+        # keeps for huge alias dictionaries), planned once per call
+        extract = canonical_triples_extractor(model, entity_dict,
+                                              patterns=patterns,
+                                              min_link_sim=min_link_sim,
+                                              drop_unlinked=drop_unlinked)
+
+        def compute(df: DataFrame) -> DataFrame:
+            return extract(repartition_salted(df, partitions)
+                           if partitions else df)
+        return compute
 
     if output_dir is None:
-        return PipelineResult(compute(transcripts), None, 0, time.time() - t0)
+        return PipelineResult(plan()(transcripts), None, 0, time.time() - t0)
 
     triples_dir = os.path.join(output_dir, "triples")
     lineage_dir = os.path.join(output_dir, "lineage")
@@ -105,16 +122,15 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame,
     bucketed = transcripts.withColumn(
         "_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int"))
     todo = sorted(set(range(n_buckets)) - done)
-    computed = 0
+    compute = plan() if todo else None
     for bucket in todo:
         part = bucketed.where(F.col("_bucket") == bucket).drop("_bucket")
-        handles: list = []
-        result = compute(part, cache_handles=handles).cache()
-        row_count = result.count()
-        checksum = (result.select(
+        stats = Observation()
+        result = compute(part).observe(
+            stats, F.count(F.lit(1)).alias("row_count"),
             F.sum(F.pmod(F.xxhash64("conv_id", "turn_idx", "subj", "pred",
                                     "obj"), F.lit(1_000_000_007)))
-            .alias("c")).collect()[0]["c"]) or 0
+            .alias("checksum"))
         # each bucket OVERWRITES its own partition directory, so a crash
         # between the triples write and the lineage append cannot duplicate
         # rows on resume — the rerun replaces the orphan output (idempotent
@@ -122,15 +138,12 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame,
         # this is a REPLACE PARTITION commit)
         result.write.mode("overwrite").parquet(
             os.path.join(triples_dir, f"bucket={bucket}"))
+        row_count, checksum = stats.get["row_count"], stats.get["checksum"]
         lineage_row = spark.createDataFrame(
-            [(bucket, "triples", row_count, int(checksum), time.time())],
+            [(bucket, "triples", row_count, int(checksum or 0), time.time())],
             "bucket int, stage string, row_count long, checksum long, finished_at double")
         lineage_row.write.mode("append").parquet(lineage_dir)
-        result.unpersist()
-        for h in handles:  # per-bucket stage caches — don't leak across buckets
-            h.unpersist()
-        computed += 1
 
     triples = spark.read.parquet(triples_dir).drop("bucket")
     lineage = spark.read.parquet(lineage_dir)
-    return PipelineResult(triples, lineage, computed, time.time() - t0)
+    return PipelineResult(triples, lineage, len(todo), time.time() - t0)

@@ -15,7 +15,8 @@ has an inter-mention window that fully matches a predicate pattern.
 
 from __future__ import annotations
 
-from typing import Iterator, List, NamedTuple, Optional, Sequence
+import uuid
+from typing import Callable, Iterator, List, NamedTuple, Optional, Sequence
 
 import pandas as pd
 import regex
@@ -178,37 +179,52 @@ def extract_triples(transcripts: DataFrame, model: NerModel,
             .mapInPandas(run, TRIPLE_SCHEMA))
 
 
-def extract_canonical_triples(transcripts: DataFrame, model: NerModel,
-                              entity_dict: DataFrame,
-                              patterns: Sequence[PredicatePattern] = tuple(DEFAULT_PATTERNS),
-                              metric: str = "jaro_winkler",
-                              threshold: float = 0.9,
-                              min_link_sim: Optional[float] = None,
-                              drop_unlinked: bool = False,
-                              ensure_parallelism: bool = True) -> DataFrame:
-    """Fused extract_triples → canonicalize_triples: the NER chain, the
-    relation patterns AND entity linking all run in ONE Arrow-batched
-    stage; only the final per-(conv, turn, s, p, o) dedup aggregation
-    shuffles.  Output-identical to the staged pair (equivalence-tested,
-    tests/test_fused_canonicalize.py).
+class _ExtractionContext:
+    """Everything a fused-extraction task needs besides its rows: the
+    unpickled model, the memoizing surface linker, the classify and
+    window caches and the compiled patterns.  Built once per Python
+    worker per plan (see canonical_triples_extractor), so the memos stay
+    warm across that worker's tasks."""
 
-    Scale trade-off vs the staged mapping-first shape
-    (canonicalize_triples): staged pays a full persist of the raw triple
-    stream plus mapping-resolution jobs, but computes each DISTINCT
-    surface's fuzzy link exactly once globally — right when the alias
-    dictionary is too big to broadcast or fuzzy similarity dominates.
-    Fused broadcasts the dictionary once and links per worker through a
-    memo (duplicate fuzzy work bounded by each worker's local surface
-    vocabulary) with ZERO extra passes over the stream — right when the
-    dictionary is model-sized, which is the pipeline default
-    (measured: kg_triples 13.6 → ~9.5 s at sf0.1 local[32])."""
-    from palladian_spark.linking import (
-        make_surface_linker, normalize_surface,
-    )
-    from palladian_spark.operators.mentions import ensure_map_parallelism
-    if ensure_parallelism:
-        transcripts = ensure_map_parallelism(transcripts)
-    spark = transcripts.sparkSession
+    def __init__(self, model: NerModel, norm_map: dict, entries: list,
+                 link_args: tuple, patterns: Sequence[PredicatePattern]):
+        from palladian_spark.linking import make_surface_linker
+        self.model = model
+        self.link = make_surface_linker(norm_map, entries, *link_args)
+        self.classify_cache: dict = {}
+        self.window_cache: dict = {}
+        self.patterns = patterns
+        self.compiled = compile_patterns(patterns)
+
+
+# plan id -> _ExtractionContext, per Python worker (linking.worker_resident)
+_WORKER_CONTEXTS: dict = {}
+_MAX_RESIDENT_PLANS = 2
+
+
+def canonical_triples_extractor(
+        model: NerModel, entity_dict: DataFrame,
+        patterns: Sequence[PredicatePattern] = tuple(DEFAULT_PATTERNS),
+        metric: str = "jaro_winkler",
+        threshold: float = 0.9,
+        min_link_sim: Optional[float] = None,
+        drop_unlinked: bool = False,
+        ensure_parallelism: bool = True
+) -> Callable[[DataFrame], DataFrame]:
+    """Plan the fused extraction once and return the ``transcripts →
+    triples`` transform; see extract_canonical_triples for what it
+    computes.
+
+    The planning work happens HERE, once per call, however often the
+    transform is applied (run_pipeline applies it once per bucket): the
+    ``norm_map`` and ``entries`` collects, the model and dictionary
+    broadcasts, and a plan id.  On the workers, every task of the plan
+    reuses one _ExtractionContext per Python worker process (keyed by the
+    plan id, at most _MAX_RESIDENT_PLANS plans resident, oldest evicted),
+    so the model is unpickled, and the linker, classify and window memos
+    are built, once per worker instead of once per task."""
+    from palladian_spark.linking import normalize_surface, worker_resident
+    spark = entity_dict.sparkSession
     model_bc = spark.sparkContext.broadcast(model)
     patterns = list(patterns)
     # dictionary-side structures, built ONCE on the driver with the SAME
@@ -223,14 +239,17 @@ def extract_canonical_triples(transcripts: DataFrame, model: NerModel,
                if fuzzy_enabled(metric) else [])
     link_bc = spark.sparkContext.broadcast((norm_map, entries))
     link_args = (metric, threshold, min_link_sim)
+    plan_id = uuid.uuid4().hex
+
+    def build() -> _ExtractionContext:
+        return _ExtractionContext(model_bc.value, *link_bc.value, link_args,
+                                  patterns)
 
     def run(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        m = model_bc.value
-        norm_map_w, entries_w = link_bc.value
-        link = make_surface_linker(norm_map_w, entries_w, *link_args)
-        cache: dict = {}
-        window_cache: dict = {}
-        compiled = compile_patterns(patterns)
+        from palladian_spark import relations
+        ctx = worker_resident(relations._WORKER_CONTEXTS, plan_id, build,
+                              _MAX_RESIDENT_PLANS)
+        m, link = ctx.model, ctx.link
         cols = ("conv_id", "turn_idx", "subj", "pred", "obj", "subj_start",
                 "subj_end", "obj_start", "obj_end", "conf")
         for pdf in iterator:
@@ -241,13 +260,14 @@ def extract_canonical_triples(transcripts: DataFrame, model: NerModel,
                     continue
                 urls, dates, smileys = (tag_urls(text), tag_dates(text),
                                         tag_smileys(text))
-                mentions = get_annotations(text, m, classify_cache=cache,
+                mentions = get_annotations(text, m,
+                                           classify_cache=ctx.classify_cache,
                                            url_annotations=urls,
                                            date_annotations=dates)
                 for row in triples_from_mentions(
-                        text, mentions, patterns,
-                        masks=urls + dates + smileys, compiled=compiled,
-                        match_cache=window_cache):
+                        text, mentions, ctx.patterns,
+                        masks=urls + dates + smileys, compiled=ctx.compiled,
+                        match_cache=ctx.window_cache):
                     subj_c = link(row[0])
                     obj_c = link(row[2])
                     if drop_unlinked and (subj_c is None or obj_c is None):
@@ -262,15 +282,59 @@ def extract_canonical_triples(transcripts: DataFrame, model: NerModel,
                         out[k].append(v)
             yield pd.DataFrame(out)
 
-    raw = (transcripts
-           .select("conv_id", "turn_idx", "text")
-           .mapInPandas(run, TRIPLE_SCHEMA))
-    return (raw.groupBy("conv_id", "turn_idx", "subj", "pred", "obj")
-            .agg(F.min("subj_start").alias("subj_start"),
-                 F.min("subj_end").alias("subj_end"),
-                 F.min("obj_start").alias("obj_start"),
-                 F.min("obj_end").alias("obj_end"),
-                 F.max("conf").alias("conf")))
+    def extract(transcripts: DataFrame) -> DataFrame:
+        from palladian_spark.operators.mentions import ensure_map_parallelism
+        if ensure_parallelism:
+            transcripts = ensure_map_parallelism(transcripts)
+        raw = (transcripts
+               .select("conv_id", "turn_idx", "text")
+               .mapInPandas(run, TRIPLE_SCHEMA))
+        return (raw.groupBy("conv_id", "turn_idx", "subj", "pred", "obj")
+                .agg(F.min("subj_start").alias("subj_start"),
+                     F.min("subj_end").alias("subj_end"),
+                     F.min("obj_start").alias("obj_start"),
+                     F.min("obj_end").alias("obj_end"),
+                     F.max("conf").alias("conf")))
+
+    return extract
+
+
+def extract_canonical_triples(transcripts: DataFrame, model: NerModel,
+                              entity_dict: DataFrame,
+                              patterns: Sequence[PredicatePattern] = tuple(DEFAULT_PATTERNS),
+                              metric: str = "jaro_winkler",
+                              threshold: float = 0.9,
+                              min_link_sim: Optional[float] = None,
+                              drop_unlinked: bool = False,
+                              ensure_parallelism: bool = True) -> DataFrame:
+    """Fused extract_triples → canonicalize_triples: the NER chain, the
+    relation patterns AND entity linking all run in ONE Arrow-batched
+    stage; only the final per-(conv, turn, s, p, o) dedup aggregation
+    shuffles.  Output-identical to the staged pair (equivalence-tested,
+    tests/test_fused_canonicalize.py).
+
+    One-shot form of canonical_triples_extractor: each call plans anew
+    (two dictionary collects, two broadcasts, a fresh plan id).  Callers
+    that apply the same dictionary to many inputs — run_pipeline's
+    buckets — build the extractor once and reuse it, so the plan and the
+    per-worker context (model, linker memo, classify/window caches; at
+    most two plans resident per Python worker) are paid once.
+
+    Scale trade-off vs the staged mapping-first shape
+    (canonicalize_triples): staged pays a full persist of the raw triple
+    stream plus mapping-resolution jobs, but computes each DISTINCT
+    surface's fuzzy link exactly once globally — right when the alias
+    dictionary is too big to broadcast or fuzzy similarity dominates.
+    Fused broadcasts the dictionary once and links per worker through a
+    memo (duplicate fuzzy work bounded by each worker's local surface
+    vocabulary) with ZERO extra passes over the stream — right when the
+    dictionary is model-sized, which is the pipeline default
+    (measured: kg_triples 13.6 → ~9.5 s at sf0.1 local[32])."""
+    return canonical_triples_extractor(
+        model, entity_dict, patterns=patterns, metric=metric,
+        threshold=threshold, min_link_sim=min_link_sim,
+        drop_unlinked=drop_unlinked,
+        ensure_parallelism=ensure_parallelism)(transcripts)
 
 
 def canonicalize_triples(triples: DataFrame, entity_dict: DataFrame,

@@ -76,8 +76,9 @@ def test_blocked_candidates_superset_of_linkable(metric, threshold):
                 assert i in cand, (q, surface)
 
 
-def test_fuzzy_link_df_matches_full_loop(spark):
-    from palladian_spark.linking import fuzzy_link_df
+def _fuzzy_case():
+    """Dictionary, misspelled + unrelated queries, and the full-loop
+    argmax per linkable query (ties → last maximal entry)."""
     entries = _synthetic_dict(200, seed=3)
     sim_fn = METRICS["jaro_winkler"]
     rng = random.Random(4)
@@ -97,6 +98,12 @@ def test_fuzzy_link_df_matches_full_loop(spark):
                 best, best_sim = (eid, surface, concept, s), s
         if best is not None:
             expected[v] = best
+    return entries, values, expected
+
+
+def test_fuzzy_link_df_matches_full_loop(spark):
+    from palladian_spark.linking import fuzzy_link_df
+    entries, values, expected = _fuzzy_case()
 
     vdf = spark.createDataFrame([(v,) for v in values], "value string")
     edf = spark.createDataFrame(entries,
@@ -106,3 +113,36 @@ def test_fuzzy_link_df_matches_full_loop(spark):
            for r in fuzzy_link_df(vdf, edf, "jaro_winkler", 0.9).collect()}
     assert got == expected
     assert len(got) > 0  # the fixture must actually exercise linking
+
+
+class _CountingIndex(_BlockedDict):
+    built = 0
+
+    def __init__(self, *args):
+        type(self).built += 1
+        super().__init__(*args)
+
+
+def test_exact_linker_never_builds_fuzzy_index(monkeypatch):
+    from palladian_spark import linking
+    monkeypatch.setattr(linking, "_BlockedDict", _CountingIndex)
+    monkeypatch.setattr(_CountingIndex, "built", 0)
+    entries = _synthetic_dict(200, seed=3)
+    norm_map = {linking.normalize_surface_py(s): s for _, s, _ in entries}
+    link = linking.make_surface_linker(norm_map, entries, "jaro_winkler", 0.9)
+    for _, surface, _ in entries:
+        key = linking.normalize_surface_py(surface)
+        assert link("  " + surface.upper()) == norm_map[key]
+    assert _CountingIndex.built == 0
+
+
+def test_lazy_linker_builds_index_once_and_matches_full_loop(monkeypatch):
+    from palladian_spark import linking
+    monkeypatch.setattr(linking, "_BlockedDict", _CountingIndex)
+    monkeypatch.setattr(_CountingIndex, "built", 0)
+    entries, values, expected = _fuzzy_case()
+    link = linking.make_surface_linker({}, entries, "jaro_winkler", 0.9)
+    got = {v: link(v) for v in values}
+    assert got == {v: expected[v][1] if v in expected else None
+                   for v in values}
+    assert _CountingIndex.built == 1

@@ -145,6 +145,35 @@ def test_pipeline_checkpoint_resume(spark, transcripts, tmp_path):
     shutil.rmtree(out)
 
 
+def test_pipeline_lineage_matches_bucket_output(spark, transcripts, tmp_path):
+    """Each lineage row's row_count / checksum (observed on the bucket's
+    write) equals a recomputation over that bucket's parquet; a bucket
+    with no conversations records 0 and 0."""
+    df, _ = transcripts
+    n_buckets = 4
+    bucket_of = F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
+    empty = df.select(bucket_of.alias("b")).first()["b"]
+    part = df.where(bucket_of != empty)
+    out = str(tmp_path / "kg")
+    result = run_pipeline(spark, part, output_dir=out, n_buckets=n_buckets)
+    assert result.buckets_computed == n_buckets
+
+    recomputed = {
+        r["bucket"]: (r["n"], r["c"])
+        for r in spark.read.parquet(f"{out}/triples").groupBy("bucket").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.pmod(F.xxhash64("conv_id", "turn_idx", "subj", "pred",
+                                    "obj"), F.lit(1_000_000_007)))
+            .alias("c")).collect()}
+    lineage = {r["bucket"]: (r["row_count"], r["checksum"])
+               for r in result.lineage.collect()}
+    assert set(lineage) == set(range(n_buckets))
+    for b in range(n_buckets):
+        assert lineage[b] == recomputed.get(b, (0, 0)), b
+    assert lineage[empty] == (0, 0)
+    assert sum(n for n, _ in lineage.values()) == result.triples.count() > 0
+
+
 def test_mention_evaluation_scores(spark):
     pred = spark.createDataFrame(
         [("c", 0, 0, 5, "exact", "PER"),     # CORRECT
